@@ -12,99 +12,12 @@ import org.apache.spark.sql.SparkSession
   * sheet. No failure escapes as an exception; every error path yields a
   * single Failed answer (`main.py:139-144`, `main.py:163-165`).
   *
-  * Extension table parity (`main.py:147-165`):
-  *  - `.xlsx .xls .xlsb .odf .ods .odt` → Excel-family ([[ExcelImporter]];
-  *    all six formats fully parsed — `.xlsx`/`.ods` via zip+StAX, binary
-  *    `.xls` via the CFB+BIFF8 reader, `.xlsb` via the binary-OOXML
-  *    reader with a DSv2 big-file road)
-  *  - `.xml` → MS SpreadsheetML ([[XmlImporter]])
-  *  - `.txt .csv .ini` → sniffed text ([[TextImporter]])
-  *  - `.ant` → text with fixed delimiter `~~@~~` (`main.py:153-154`)
-  *  - `.pdf` → [[PdfImporter]] (hand-rolled ISO 32000 reader: lenient
-  *    object scan + FlateDecode + text-operator table reconstruction)
-  *  - `.html .htm` → [[HtmlImporter]] (beyond the reference's table —
-  *    the LLM-corpus entry format: lenient WHATWG-lineage tag reader,
-  *    `<table>` frames or boilerplate-classified main content)
-  *  - `.docx` → [[DocxImporter]] (beyond the reference's table — OPC zip +
-  *    WordprocessingML; `<w:tbl>` frames or one row per body paragraph)
-  *  - `.pptx` → [[PptxImporter]] (beyond the reference's table — OPC zip +
-  *    PresentationML; per-slide DrawingML table frames or text lines)
-  *  - `.sqlite .sqlite3 .db` → [[SqliteImporter]] (beyond the reference's
-  *    table — from-spec page/B-tree reader, one answer per user table)
-  *  - `.parquet` → [[ParquetImporter]]
-  *  - `.json` → [[JsonImporter]]
-  *  - `.jsonl .ndjson` → [[JsonLinesImporter]] (beyond the reference's
-  *    table — the LLM-corpus interchange format; native splittable
-  *    line-delimited Spark json scan)
-  *  - `.tsv` → [[TextImporter]] with an explicit tab delimiter (beyond
-  *    the reference's table; skips the sniff vote — the extension IS the
-  *    declaration)
-  *  - `.warc .warc.gz` → [[WarcImporter]] (beyond the reference's table —
-  *    ISO 28500 record catalog, the BulkIngest route's one-file twin)
-  *  - `.tar .tar.gz .tgz .tar.bz2 .tar.zst` → [[TarImporter]] (beyond the
-  *    reference's table — from-spec ustar member catalog for WebDataset
-  *    training shards, the BulkIngest route's one-file twin)
-  *  - `.gz .bz2` over a stream-decodable inner extension (`.jsonl.gz`,
-  *    `.csv.gz`, `.tsv.gz`, …) → the inner format's importer; the Hadoop
-  *    codec layer decompresses inline for scans and sniffers alike
-  *  - `.zst .zstd` over a stream-decodable inner extension → the inner
-  *    format's importer, like the `.gz` peel: `.warc.zst` is a BYTE road
-  *    through `FsIO.openDecoded` (zstd-jni), and the text/jsonl forms
-  *    (`.csv.zst`, `.jsonl.zst`, …) ride the `graft-zstd-lines` DSv2
-  *    source ([[graft.sources.zstd.ZstdLinesDataSource]]) — Hadoop's
-  *    ZStandardCodec needs a native lib this container lacks, so the
-  *    native text/json scans can't take them directly; `.sqlite.zst`
-  *    decodes to a capped byte image (no random access in a zstd
-  *    stream), parity with BulkIngest's road; `.json.zst` (a whole JSON
-  *    DOCUMENT the multiLine scan can't decode here) likewise parses
-  *    from a capped decoded image. Compressed container formats with no
-  *    streaming road (`.xlsx.zst`, …) stay unknown → Failed.
-  *  - `.pk1` and `.pickle` → [[PickleImporter]] (documented gap). The
-  *    reference matches the literal `"pickle"` without a dot, which
-  *    `Path.suffix` can never produce (`main.py:161` bug); per SURVEY.md §7
-  *    we honor `.pk1` and also accept `.pickle`.
+  * The extension table and the compression peel live in [[Formats]],
+  * shared with `BulkIngest`'s roads.
   */
 object AnyFile {
 
   def parse(spark: SparkSession, path: String): Seq[ParserAnswer] = {
-    val extension = {
-      val name = graft.sources.FsIO.fileName(path).toLowerCase
-      def extOf(n: String): String = {
-        val dot = n.lastIndexOf('.')
-        if (dot <= 0) "" else n.substring(dot)
-      }
-      val last = extOf(name)
-      // Compression-suffix peel: `.gz`/`.bz2` route on the INNER extension
-      // for the stream-decodable regimes — Spark's text/json scans and the
-      // byte readers here all decompress through the Hadoop codec layer,
-      // so `corpus.jsonl.gz` and `table.csv.gz` (the daily-hit LLM corpus
-      // forms) parse like their plain twins. Container formats that need
-      // random access (.xlsx, .sqlite, …) have no streaming road — their
-      // compressed forms stay unknown → Failed, never mis-parsed.
-      if (last == ".gz" || last == ".bz2") {
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar") => inner
-          case _ => last
-        }
-      } else if (last == ".tgz") {
-        // the conventional .tar.gz contraction; TarImporter supplies the
-        // explicit gzip stream (no codec claims the suffix)
-        ".tar"
-      } else if (last == ".zst" || last == ".zstd") {
-        // zstd peel: the byte-road importer (.warc) and the line-regime
-        // importers (via the graft-zstd-lines DSv2 road — see scaladoc).
-        // The importers branch on the FULL path's .zst suffix, so the
-        // peeled inner extension only picks the importer.
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar" |
-              ".sqlite" | ".sqlite3" | ".db") => inner
-          case _ => last
-        }
-      } else last
-    }
-
     // Check file (present, readable) — main.py:136-144. Unlike the
     // reference (whose open('rb') probe would crash on a directory),
     // directories are allowed through: Spark sources read partitioned
@@ -122,27 +35,23 @@ object AnyFile {
     if (!graft.sources.FsIO.exists(path) || localUnreadable)
       return Seq(ParserAnswer.failed(spark, path))
 
-    val importer: Importer = extension match {
-      case ".xlsx" | ".xls" | ".xlsb" | ".odf" | ".ods" | ".odt" =>
-        new ExcelImporter(spark, path, extension)
-      case ".xml" => new XmlImporter(spark, path)
-      case ".txt" | ".csv" | ".ini" => new TextImporter(spark, path)
-      case ".ant" =>
-        new TextImporter(spark, path, Some(TextImporter.AntDelimiter))
-      case ".html" | ".htm" => new HtmlImporter(spark, path)
-      case ".docx" => new DocxImporter(spark, path)
-      case ".pptx" => new PptxImporter(spark, path)
-      case ".sqlite" | ".sqlite3" | ".db" => new SqliteImporter(spark, path)
-      case ".warc" => new WarcImporter(spark, path)
-      case ".tar" => new TarImporter(spark, path)
-      case ".pdf"     => new PdfImporter(spark, path, concat = true)
-      case ".parquet" => new ParquetImporter(spark, path)
-      case ".json"    => new JsonImporter(spark, path)
-      case ".jsonl" | ".ndjson" => new JsonLinesImporter(spark, path)
-      case ".tsv" =>
-        new TextImporter(spark, path, Some("\t"))
-      case ".pk1" | ".pickle" => new PickleImporter(spark, path)
-      case _ => return Seq(ParserAnswer.failed(spark, path))
+    val (format, _) =
+      Formats.resolve(path).getOrElse(return Seq(ParserAnswer.failed(spark, path)))
+    val importer: Importer = format match {
+      case w: Formats.Workbook => new ExcelImporter(spark, path, w)
+      case Formats.Xmlss => new XmlImporter(spark, path)
+      case Formats.Text(delim) => new TextImporter(spark, path, delim)
+      case Formats.Html => new HtmlImporter(spark, path)
+      case Formats.Docx => new DocxImporter(spark, path)
+      case Formats.Pptx => new PptxImporter(spark, path)
+      case Formats.Sqlite => new SqliteImporter(spark, path)
+      case Formats.Warc => new WarcImporter(spark, path)
+      case Formats.Tar => new TarImporter(spark, path)
+      case Formats.Pdf => new PdfImporter(spark, path, concat = true)
+      case Formats.Parquet => new ParquetImporter(spark, path)
+      case Formats.Json => new JsonImporter(spark, path)
+      case Formats.JsonLines => new JsonLinesImporter(spark, path)
+      case Formats.Pickle => new PickleImporter(spark, path)
     }
     importer.work()
   }

@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
-import graft.sources.FsIO
+import graft.sources.{Formats, FsIO}
 
 /** Distributed bulk ingestion — the reference's single-file `parse()`
   * semantics (`/root/reference/main.py:118-168`) scaled to a CORPUS of
@@ -143,6 +143,7 @@ object BulkIngest {
       splitBatchBytes: Long = 8L << 20): DataFrame = {
     import graft.sources.xlsx.{ExcelTable, XlsxParser}
     import graft.sources.xlsb.XlsbStream
+    import graft.sources.Formats._
     import org.apache.spark.sql.functions.{array, col, lit, typedLit}
     implicit val enc = Encoders.product[CellRow]
     val parts =
@@ -150,16 +151,8 @@ object BulkIngest {
       else math.max(1, spark.sparkContext.defaultParallelism)
     val props = FsIO.captureProps(spark)
 
-    def isBig(p: String, len: Long): Boolean = {
-      val l = p.toLowerCase
-      len >= bigBytes &&
-        (l.endsWith(".xlsx") || l.endsWith(".xlsb") || l.endsWith(".xml") ||
-          l.endsWith(".ods") || l.endsWith(".odf") || l.endsWith(".odt") ||
-          l.endsWith(".warc.gz") || l.endsWith(".tar") ||
-          l.endsWith(".tar.zst") || l.endsWith(".tar.zstd") ||
-          l.endsWith(".jsonl.zst") || l.endsWith(".ndjson.zst") ||
-          l.endsWith(".jsonl.zstd") || l.endsWith(".ndjson.zstd"))
-    }
+    def isBig(p: String, len: Long): Boolean =
+      len >= bigBytes && Formats.resolve(p).exists((bigRoad _).tupled)
 
     // Distributed listing with lengths: one listStatus on the driver
     // (immediate children only), subtree sweeps inside executor tasks.
@@ -177,25 +170,22 @@ object BulkIngest {
         .union(spark.createDataset(rootFiles))
     }
 
-    // The ONE driver-side materialization: big splittable files.
-    val big: Seq[String] = listedWithLen
+    // The ONE driver-side materialization: big splittable files, grouped
+    // by their (format, codec) road.
+    val big: Map[(Format, Codec), Seq[String]] = listedWithLen
       .filter((e: (String, Long)) => isBig(e._1, e._2))
       .map(_._1)(Encoders.STRING)
       .collect().toSeq.sorted
-    val (bigZstJsonl, restZ) = big.partition { p =>
-      val l = p.toLowerCase
-      l.endsWith(".jsonl.zst") || l.endsWith(".ndjson.zst") ||
-        l.endsWith(".jsonl.zstd") || l.endsWith(".ndjson.zstd")
-    }
-    val (bigTarZst, restTz) = restZ.partition { p =>
-      val l = p.toLowerCase
-      l.endsWith(".tar.zst") || l.endsWith(".tar.zstd")
-    }
-    val (bigWarcGz, restW) = restTz.partition(_.toLowerCase.endsWith(".warc.gz"))
-    val (bigTar, restT) = restW.partition(_.toLowerCase.endsWith(".tar"))
-    val (bigXlsx, rest0) = restT.partition(_.toLowerCase.endsWith(".xlsx"))
-    val (bigXlsb, rest1) = rest0.partition(_.toLowerCase.endsWith(".xlsb"))
-    val (bigXml, bigOds) = rest1.partition(_.toLowerCase.endsWith(".xml"))
+      .groupBy(p => Formats.resolve(p).get)
+    def bigOf(format: Format, codec: Codec = Plain) = big.getOrElse((format, codec), Nil)
+    val bigXlsx = bigOf(Xlsx)
+    val bigXlsb = bigOf(Xlsb)
+    val bigXml = bigOf(Xmlss)
+    val bigOds = bigOf(Ods)
+    val bigWarcGz = bigOf(Warc, Gzip)
+    val bigTar = bigOf(Tar)
+    val bigTarZst = bigOf(Tar, Zstd)
+    val bigZstJsonl = bigOf(JsonLines, Zstd)
 
     // Small road: listing output flows straight into the file-grain
     // parse — never collected.
@@ -816,98 +806,57 @@ object BulkIngest {
   /** One file → cell rows; pure, runs inside executor tasks. Exposed for
     * the per-format parity tests against `AnyFile.parse`. */
   private[graft] def parseOne(path: String): Seq[CellRow] = {
-    val (suffix, zstd) = {
-      val name = FsIO.fileName(path).toLowerCase
-      def extOf(n: String): String = {
-        val dot = n.lastIndexOf('.')
-        if (dot < 0) "" else n.substring(dot)
-      }
-      val last = extOf(name)
-      // AnyFile's compression-suffix peel: `.gz`/`.bz2` route on the inner
-      // extension for the stream-decodable regimes (Hadoop codec layer);
-      // compressed container formats stay unknown → Failed.
-      if (last == ".gz" || last == ".bz2") {
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar") =>
-            (inner, false)
-          case _ => (last, false)
-        }
-      } else if (last == ".tgz") {
-        // the conventional contraction of .tar.gz; tar() decodes through
-        // an explicit gzip stream (no codec claims the .tgz suffix)
-        (".tar", false)
-      } else if (last == ".zst" || last == ".zstd") {
-        // `.zst` peel (The Pile and most modern corpora ship `.jsonl.zst`):
-        // zstd decodes through zstd-jni in FsIO.openDecoded, so every
-        // BYTE-ROAD parser here works unchanged. Spark's native json/text
-        // scans cannot decode zstd in this container (Hadoop's
-        // ZStandardCodec needs a native lib), so jsonl/ndjson leave the
-        // Native-marker road for a decoded line road; sqlite — whose
-        // pages need random access gzip/zstd can't give — and `.json`
-        // (one JSON DOCUMENT, not lines) decode to a capped byte image;
-        // `.tar.zst` streams through the member walk like `.tar.gz`.
-        extOf(name.dropRight(last.length)) match {
-          case inner @ (".txt" | ".csv" | ".ini" | ".tsv" | ".ant" |
-              ".jsonl" | ".ndjson" | ".json" | ".warc" | ".tar" |
-              ".sqlite" | ".sqlite3" | ".db") => (inner, true)
-          case _ => (last, false)
-        }
-      } else (last, false)
-    }
+    import Formats._
     def failed(engine: String) =
       Seq(CellRow(path, engine, "None", "Failed", -1L, Seq.empty))
+    val (format, codec) = Formats.resolve(path).getOrElse(return failed(""))
+    // zstd: Spark's native json/text scans cannot decode it here, so the
+    // Native-marker formats take decoded byte roads, and sqlite decodes
+    // to a capped byte image (its pages need random access)
+    val zstd = codec == Zstd
     try {
       if (!FsIO.isFile(path)) return failed("")
-      suffix match {
-        case ".xlsx" => xlsx(path)
-        case ".ods" | ".odf" | ".odt" => ods(path)
-        case ".xls" => xls(path)
-        case ".xlsb" => xlsb(path)
-        case ".xml" => xmlss(path)
-        case ".txt" | ".csv" | ".ini" => text(path, None)
-        case ".ant" =>
-          text(path, Some(graft.sources.TextImporter.AntDelimiter))
-        case ".pdf" => pdf(path)
-        case ".html" | ".htm" => html(path)
-        case ".docx" => docx(path)
-        case ".pptx" => pptx(path)
-        case ".sqlite" | ".sqlite3" | ".db" => sqlite(path, decoded = zstd)
-        case ".warc" => warc(path)
-        case ".tar" => tar(path)
-        case ".parquet" =>
+      format match {
+        case Xlsx => xlsx(path)
+        case Ods => ods(path)
+        case Xls => xls(path)
+        case Xlsb => xlsb(path)
+        case Xmlss => xmlss(path)
+        case Text(delim) => text(path, delim)
+        case Pdf => pdf(path)
+        case Html => html(path)
+        case Docx => docx(path)
+        case Pptx => pptx(path)
+        case Sqlite => sqlite(path, decoded = zstd)
+        case Warc => warc(path)
+        case Tar => tar(path)
+        case Parquet =>
           Seq(CellRow(path, "ImportParquet", "Parquet file content",
             "Native", -1L, Seq.empty))
-        case ".json" if zstd => jsonDocBytes(path)
-        case ".json" =>
+        case Json if zstd => jsonDocBytes(path)
+        case Json =>
           Seq(CellRow(path, "ImportJSON", "JSON file content",
             "Native", -1L, Seq.empty))
-        case ".jsonl" | ".ndjson" if zstd => jsonLinesBytes(path)
-        case ".jsonl" | ".ndjson" =>
+        case JsonLines if zstd => jsonLinesBytes(path)
+        case JsonLines =>
           Seq(CellRow(path, "ImportJSONL", "JSON lines content",
             "Native", -1L, Seq.empty))
-        case ".tsv" => text(path, Some("\t"))
-        case ".pk1" | ".pickle" => failed("ImportPickle")
-        case _ => failed("")
+        case Pickle => failed(format.engine)
       }
-    } catch { case _: Exception => failed(engineFor(suffix)) }
+    } catch { case _: Exception => failed(format.engine) }
   }
 
-  private def engineFor(suffix: String): String = suffix match {
-    case ".xlsx" | ".ods" | ".odf" | ".odt" | ".xls" | ".xlsb" => "ImportExcel"
-    case ".xml" => "ImportXML"
-    case ".txt" | ".csv" | ".ini" | ".ant" | ".tsv" => "ImportText"
-    case ".pdf" => "ImportPDF"
-    case ".html" | ".htm" => "ImportHTML"
-    case ".docx" => "ImportDocx"
-    case ".pptx" => "ImportPptx"
-    case ".sqlite" | ".sqlite3" | ".db" => "ImportSqlite"
-    case ".warc" => "ImportWARC"
-    case ".tar" => "ImportTar"
-    // byte roads that can throw mid-decode (truncated .jsonl.zst)
-    case ".jsonl" | ".ndjson" => "ImportJSONL"
-    case ".json" => "ImportJSON"
-    case _ => ""
+  /** Whether files of this format past `bigBytes` take a split road in
+    * [[parseTreeAuto]] rather than the file-grain parse: the
+    * range-splittable workbooks, `.warc.gz` at gzip members, plain and
+    * zstd `.tar` at members, `.jsonl.zst` at zstd frames. */
+  private def bigRoad(format: Formats.Format, codec: Formats.Codec): Boolean = {
+    import Formats._
+    (format, codec) match {
+      case (Xlsx | Xlsb | Xmlss | Ods, Plain) | (Warc, Gzip) |
+          (Tar, Plain | Zstd) | (JsonLines, Zstd) => true
+      case _ => false
+    }
   }
 
   /** Decoded-image cap for the compressed byte roads that must

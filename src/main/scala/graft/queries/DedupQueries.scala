@@ -482,42 +482,61 @@ object DedupQueries {
     * running the whole shingle→digest→prefix-join pipeline twice inside
     * one query (r15 pass; within-query plan reuse, the q22-sigs
     * discipline — nothing is shared ACROSS queries). */
-  private def jaccardComponentsOf(docs: DataFrame, pairs: DataFrame): DataFrame = {
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // The loop-invariant edge table materializes PRE-PARTITIONED AND
-    // PRE-SORTED on dst — its per-round join key (r16 pass, guide §2.4):
-    // the checkpoint cut preserves outputPartitioning/outputOrdering, so
-    // every round's sym ⋈ labels sort-merge join reads sym exchange-free
-    // and sort-free; only the (changing) label table moves per round.
-    // One up-front exchange+sort, amortized over all rounds.
+  private def jaccardComponentsOf(docs: DataFrame, pairs: DataFrame): DataFrame =
+    labelPropComponents(docs.select(col("doc_id")),
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+
+  /** Min-label propagation to its fixpoint over an undirected (src, dst)
+    * edge table; returns (doc_id, cluster) for every row of `nodes`.
+    * Shared by the Jaccard components (q24 family) and q114.
+    *
+    * The loop-invariant symmetric edge table materializes PRE-PARTITIONED
+    * AND PRE-SORTED on dst — its per-round join key (r16 pass, guide
+    * §2.4): the checkpoint cut preserves outputPartitioning/
+    * outputOrdering, so every round's sym ⋈ labels sort-merge join reads
+    * sym exchange-free and sort-free; only the (changing) label table
+    * moves per round. One up-front exchange+sort, amortized over all
+    * rounds.
+    *
+    * The loop runs over EDGE-TOUCHED nodes only: a doc with no edge can
+    * neither receive a lower label (no incoming edge) nor lower anyone
+    * else's (no outgoing edge), so its label is its own id at every round
+    * — carrying those rows through every round's join + checkpoint +
+    * convergence count shuffled the whole corpus per round for rows that
+    * never change (guide §2.3 "shuffle fewer bytes"). Isolated docs
+    * re-enter as their own singleton cluster in the left-join read-off;
+    * the fixpoint is unchanged. Rounds = component diameter; a graph that
+    * has not converged by [[MaxComponentRounds]] throws rather than answer
+    * partial labels. */
+  private[graft] def labelPropComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val sym = edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("dst")).sortWithinPartitions("dst")
       .materialized
-    // The propagation loop runs over EDGE-TOUCHED nodes only: a doc with
-    // no similarity edge can neither receive a lower label (no incoming
-    // edge) nor lower anyone else's (no outgoing edge), so its label is
-    // its own id at every round — carrying those rows through every
-    // round's join + checkpoint + convergence count shuffled the whole
-    // corpus per round for rows that never change (guide §2.3 "shuffle
-    // fewer bytes"). Isolated docs re-enter as their own singleton
-    // cluster in the left-join read-off; the fixpoint is unchanged.
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).materialized
     var changed = 1L
     var rounds = 0
-    while (changed > 0 && rounds < 50) {
+    while (changed > 0) {
+      if (rounds == MaxComponentRounds) roundCapHit("labelPropComponents")
       val next = labelPropRound(sym, labels).materialized
       changed = next.filter(col("nxt") < col("lbl")).count()
       labels = next.select(col("node"), col("nxt").as("lbl"))
       rounds += 1
     }
-    docs.select(col("doc_id"))
+    nodes
       .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("lbl"), col("doc_id")).as("cluster"))
   }
+
+  /** Round cap of the connected-components loops. */
+  private final val MaxComponentRounds = 50
+
+  private def roundCapHit(op: String): Nothing =
+    throw new IllegalStateException(
+      s"$op: not converged after $MaxComponentRounds rounds; " +
+        "refusing to return partial labels")
 
   /** One min-label-propagation round, factored out so its plan shape is
     * pinnable by PlanRegressionSpec: per round the only exchanges are on
@@ -622,7 +641,8 @@ object DedupQueries {
     var edges = edges0.distinct().materialized
     var changed = 1L
     var rounds = 0
-    while (changed > 0 && rounds < 50) {
+    while (changed > 0) {
+      if (rounds == MaxComponentRounds) roundCapHit("twoStarComponents")
       val sym = edges.select(col("hi").as("u"), col("lo").as("v"))
         .union(edges.select(col("lo").as("u"), col("hi").as("v")))
       // r16 round restructure — same SETS per round (so the same rounds
@@ -1704,29 +1724,7 @@ object DedupQueries {
         .filter(least(col("la.n_chars"), col("lb.n_chars")) * 2 >=
           greatest(col("la.n_chars"), col("lb.n_chars")))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val sym = edges
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        // pre-partitioned+sorted on the per-round join key — the
-        // jaccardComponentsOf invariant-table discipline (guide §2.4)
-        .repartition(col("dst")).sortWithinPartitions("dst")
-        .materialized
-      // edge-touched nodes only — the jaccardComponents discipline:
-      // isolated docs never change label, so they skip the loop and
-      // re-enter as singleton clusters in the left-join read-off
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node")).materialized
-      var changed = 1L
-      var rounds = 0
-      while (changed > 0 && rounds < 50) {
-        val next = labelPropRound(sym, labels).materialized
-        changed = next.filter(col("nxt") < col("lbl")).count()
-        labels = next.select(col("node"), col("nxt").as("lbl"))
-        rounds += 1
-      }
-      val comp = docs.select(col("doc_id"))
-        .join(labels.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("doc_id")).as("cluster"))
+      val comp = labelPropComponents(docs.select(col("doc_id")), edges)
       val sizes = comp.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
       val best = comp.join(lens, "doc_id")
         .withColumn("rn", row_number().over(
@@ -1909,7 +1907,7 @@ object DedupQueries {
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val sym = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
         // pre-partitioned+sorted on the per-round join key — the
-        // jaccardComponentsOf invariant-table discipline (guide §2.4)
+        // labelPropComponents invariant-table discipline (guide §2.4)
         .repartition(col("dst")).sortWithinPartitions("dst")
         .materialized // two vote rounds
       def round(labels: DataFrame): DataFrame = {

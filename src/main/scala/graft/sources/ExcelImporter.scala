@@ -45,18 +45,17 @@ import scala.xml.{Elem, Node, XML}
 class ExcelImporter(
     val spark: SparkSession,
     val filePath: String,
-    extension: String
+    workbook: Formats.Workbook
 ) extends Importer {
   override def engineName: String = "ImportExcel"
 
   def work(): Seq[ParserAnswer] = {
     try {
-      extension match {
-        case ".xlsx"                   => workXlsx()
-        case ".ods" | ".odf" | ".odt"  => workOds()
-        case ".xls"                    => workXls()
-        case ".xlsb"                   => workXlsb()
-        case _                         => failedAnswer()
+      workbook match {
+        case Formats.Xlsx => workXlsx()
+        case Formats.Ods  => workOds()
+        case Formats.Xls  => workXls()
+        case Formats.Xlsb => workXlsb()
       }
     } catch { case _: Exception => failedAnswer() }
   }

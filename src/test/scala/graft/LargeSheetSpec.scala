@@ -80,7 +80,7 @@ class LargeSheetSpec extends SparkSpec {
     makeBigXlsx(p)
 
     graft.sources.xlsx.SheetOpenRecorder.drain() // discard earlier opens
-    val answers = new graft.sources.ExcelImporter(spark, p, ".xlsx").work()
+    val answers = new graft.sources.ExcelImporter(spark, p, graft.sources.Formats.Xlsx).work()
     val opens = graft.sources.xlsx.SheetOpenRecorder.drain()
     // the shape probe runs as a Spark job: every sheet decode during
     // parse() must be on an executor task thread, never the driver

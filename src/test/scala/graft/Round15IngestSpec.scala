@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import com.github.luben.zstd.ZstdOutputStream
 
-import graft.operators.{BulkIngest, WebDataset}
+import graft.model.ParserAnswer
+import graft.operators.{BulkIngest, WebCorpus, WebDataset}
 import graft.sources.tar.{TarBuild, TarWalk}
 
 /** Round-15 ingestion laws: the `.tar` WebDataset shard road (VERDICT r14
@@ -434,5 +435,147 @@ class Round15IngestSpec extends SparkSpec {
     java.nio.file.Files.write(dir.resolve("nl.jsonl.zst"), zst(utf8("\n")))
     assert(BulkIngest.parseOne(dir.resolve("nl.jsonl.zst").toString)
       .map(_.parse_info) == Seq("Failed"))
+  }
+
+  private def bz2(bytes: Array[Byte]): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val b = new org.apache.commons.compress.compressors.bzip2
+      .BZip2CompressorOutputStream(bos)
+    b.write(bytes); b.close()
+    bos.toByteArray
+  }
+
+  /** A one-sheet workbook both roads parse OK under an `.xlsx` name. */
+  private def xlsxBytes: Array[Byte] = {
+    val main = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    val rels =
+      "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.ZipOutputStream(bos)
+    Seq(
+      "xl/workbook.xml" -> s"""<workbook xmlns="$main" xmlns:r="$rels"><sheets>
+        |<sheet name="P1" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin,
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+          |<Relationship Id="rId1" Type="t" Target="worksheets/sheet1.xml"/>
+          |</Relationships>""".stripMargin,
+      "xl/worksheets/sheet1.xml" -> s"""<worksheet xmlns="$main"><sheetData>
+        |<row r="1"><c r="A1"><v>7</v></c><c r="B1"><v>8</v></c></row>
+        |</sheetData></worksheet>""".stripMargin
+    ).foreach { case (name, body) =>
+      z.putNextEntry(new java.util.zip.ZipEntry(name))
+      z.write(utf8(body))
+      z.closeEntry()
+    }
+    z.close()
+    bos.toByteArray
+  }
+
+  test("dotfiles have no suffix: .csv/.tsv/.jsonl and a big .xlsx answer Failed on both roads") {
+    // the reference routes on Path.suffix, and Path('.csv').suffix == ''
+    val dir = tmpDir("dotfiles")
+    val bodies = Seq(
+      ".csv" -> utf8("a,b\n1,2\n"),
+      ".tsv" -> utf8("a\tb\n1\t2\n"),
+      ".jsonl" -> utf8("{\"a\":1}\n{\"a\":2}\n"),
+      ".xlsx" -> xlsxBytes)
+    bodies.foreach { case (n, b) => java.nio.file.Files.write(dir.resolve(n), b) }
+    // control: the same bytes under a suffixed name parse OK, so the
+    // Failed below comes from the name alone
+    val ctl = tmpDir("dotfiles_ctl")
+    bodies.foreach { case (n, b) =>
+      val p = ctl.resolve("x" + n)
+      java.nio.file.Files.write(p, b)
+      assert(!AnyFile.parse(spark, p.toString).head.isFailed, n)
+    }
+    bodies.foreach { case (n, _) =>
+      assert(AnyFile.parse(spark, dir.resolve(n).toString).forall(_.isFailed), n)
+    }
+    // the workbook sits at bigBytes, past the size split; the text files
+    // sit below it
+    val big = java.nio.file.Files.size(dir.resolve(".xlsx"))
+    val rows = BulkIngest.parseTreeAuto(spark, dir.toString, bigBytes = big)
+      .collect().map(r => (graft.sources.FsIO.fileName(r.getString(0)), r.getString(3)))
+    assert(rows.sorted.toSeq == bodies.map(b => (b._1, "Failed")).sorted)
+  }
+
+  test("AnyFile ⇔ BulkIngest parity: every suffix, case, codec wrap and dotfile agrees") {
+    val dir = tmpDir("parity")
+    val parquet = {
+      val out = tmpDir("parity_pq").resolve("t").toString
+      spark.range(2).toDF("x").coalesce(1).write.parquet(out)
+      val part = new java.io.File(out).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+      java.nio.file.Files.readAllBytes(part.toPath)
+    }
+    // a parseable body where a writer is at hand; bytes no decoder
+    // accepts otherwise, so both roads must agree on Failed there
+    def body(ext: String): Array[Byte] = ext match {
+      case ".txt" | ".csv" | ".ini" | ".tsv" => utf8("a,b\tc\n1,2\t3\n")
+      case ".ant" => utf8("k~~@~~v\n1~~@~~2\n")
+      case ".json" => utf8("""[{"a":1},{"a":2}]""")
+      case ".jsonl" | ".ndjson" => utf8("{\"a\":1}\n{\"a\":2}\n")
+      case ".warc" => WebCorpus.warcRecord(1L, "<p>page</p>")
+      case ".tar" => TarBuild.archive(members)
+      case ".sqlite" | ".sqlite3" | ".db" =>
+        import graft.sources.sqlite.SqliteParser.{IntCell, TextCell}
+        graft.sources.sqlite.SqliteWriter.build("t", Seq("id", "name"), ipk = 0,
+          rows = Seq((1L, Seq(IntCell(1L), TextCell("a"))),
+            (2L, Seq(IntCell(2L), TextCell("b")))))
+      case ".xml" => utf8(
+        """<?xml version="1.0"?><Workbook xmlns:ss="urn:schemas-microsoft-com:office:spreadsheet">
+          |<ss:Worksheet ss:Name="S"><ss:Table><ss:Row><ss:Cell><ss:Data>v</ss:Data>
+          |</ss:Cell></ss:Row></ss:Table></ss:Worksheet></Workbook>""".stripMargin)
+      case ".html" | ".htm" => utf8("<table><tr><td>a</td><td>b</td></tr></table>")
+      case ".xlsx" => xlsxBytes
+      case ".parquet" => parquet
+      case _ => utf8("no decoder accepts this")
+    }
+    val codecs = Seq[(String, Array[Byte] => Array[Byte])](
+      ".gz" -> gz, ".bz2" -> bz2, ".zst" -> zst, ".zstd" -> zst)
+    val streamable = Seq(".txt", ".csv", ".ini", ".tsv", ".ant", ".json",
+      ".jsonl", ".ndjson", ".warc", ".tar")
+    val forms: Seq[(String, Array[Byte])] =
+      graft.sources.Formats.extensions.flatMap { e =>
+        Seq(s"f$e" -> body(e), s"U${e.toUpperCase}" -> body(e))
+      } ++
+      // every allowed wrap
+      (for (i <- streamable; (c, enc) <- codecs) yield s"w$i$c" -> enc(body(i))) ++
+      (for (i <- Seq(".sqlite", ".sqlite3", ".db"); c <- Seq(".zst", ".zstd"))
+        yield s"w$i$c" -> zst(body(i))) ++
+      Seq("w.tgz" -> gz(body(".tar")), "W.CSV.GZ" -> gz(body(".csv")),
+        "W.JSONL.ZST" -> zst(body(".jsonl"))) ++
+      // one forbidden wrap per codec: containers with no streaming road
+      Seq("x.xlsx.gz" -> gz(xlsxBytes), "x.xlsx.bz2" -> bz2(xlsxBytes),
+        "x.xlsx.zst" -> zst(xlsxBytes), "x.xlsx.zstd" -> zst(xlsxBytes),
+        "x.sqlite.gz" -> gz(body(".sqlite"))) ++
+      // dotfiles and unknown suffixes
+      Seq(".csv" -> body(".csv"), ".xlsx" -> xlsxBytes, ".tgz" -> gz(body(".tar")),
+        ".csv.gz" -> gz(body(".csv")), "f.xyz" -> body(".csv"),
+        "noext" -> body(".csv"), "f.gz" -> gz(body(".csv")))
+    assert(forms.map(_._1).distinct.length == forms.length)
+    forms.foreach { case (n, b) => java.nio.file.Files.write(dir.resolve(n), b) }
+    // engine: parseOne's "" is the unrouted answer, the reference's
+    // "Not used"; status: Native defers to Spark's own reader, which is
+    // what AnyFile runs, so it counts as OK
+    def bulk(p: String) = {
+      val rows = BulkIngest.parseOne(p)
+      (rows.map(r => if (r.engine.isEmpty) ParserAnswer.EngineDefault else r.engine).distinct,
+        rows.exists(_.parse_info != "Failed"))
+    }
+    def any(p: String) = {
+      val answers = AnyFile.parse(spark, p)
+      (answers.map(_.engine).distinct, answers.exists(!_.isFailed))
+    }
+    val results = forms.map { case (n, _) =>
+      val p = dir.resolve(n).toString
+      (n, any(p), bulk(p))
+    }
+    val mismatches = results.collect { case (n, a, b) if a != b =>
+      s"$n: AnyFile $a vs BulkIngest $b"
+    }
+    assert(mismatches.isEmpty, mismatches.mkString("\n"))
+    // the law must not hold vacuously: real parses on both sides
+    assert(results.count(_._2._2) > 60)
   }
 }

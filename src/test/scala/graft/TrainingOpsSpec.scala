@@ -129,6 +129,19 @@ class TrainingOpsSpec extends SparkSpec {
     assert(rounds <= 12, s"path-256 took $rounds rounds — not logarithmic")
   }
 
+  test("min-label propagation throws at its round cap instead of answering partial labels") {
+    // a 64-node PATH has diameter 63: label 0 cannot reach node 63 within
+    // the 50-round cap, so the helper must refuse, naming itself and the cap
+    import spark.implicits._
+    val n = 64L
+    val nodes = (0L until n).toDF("doc_id")
+    val edges = (1L until n).map(i => (i - 1, i)).toDF("src", "dst")
+    val err = intercept[IllegalStateException](
+      DedupQueries.labelPropComponents(nodes, edges))
+    assert(err.getMessage.contains("labelPropComponents"), err.getMessage)
+    assert(err.getMessage.contains("50 rounds"), err.getMessage)
+  }
+
   test("q91: matches a from-scratch binary-lifting recompute") {
     val d = docs
     val levels = d.map { case (id, _, text) =>
